@@ -1,13 +1,11 @@
-"""JVM-side S2 stab keys as Catalyst expressions.
+"""JVM-side S2 stab keys as Spark SQL text.
 
-Why: Arrow JVM<->Python transport is a hard throughput ceiling (on this
-box it stops scaling past ~8 concurrent streams), so the 10^12-row hot
-path must stay inside whole-stage codegen. A full Catalyst S2 cell id
-needs the Hilbert lookup rounds (the expression tree blows up), but the
-JOIN does not need Hilbert ids — any injective encoding of the ancestor
-cell works. An S2 cell at level L is exactly (face, i >> (30-L),
-j >> (30-L)), so the stab key is pure bit math over the (face, i, j)
-projection:
+Why: the default "jvm" flagship strategy keeps the whole stab inside
+whole-stage codegen. A full Catalyst S2 cell id needs the Hilbert
+lookup rounds (the expression tree blows up), but the JOIN does not
+need Hilbert ids — any injective encoding of the ancestor cell works.
+An S2 cell at level L is exactly (face, i >> (30-L), j >> (30-L)), so
+the stab key is pure bit math over the (face, i, j) projection:
 
     key(L) = face<<61 | L<<56 | (i>>s)<<28 | (j>>s)   with s = 30-L
 
@@ -16,76 +14,90 @@ computes the same keys from its uint64 cell ids once at build time
 (geo.s2.fij_keys). Cell ids remain the public tile identifiers; only
 the join key space changes.
 
+Why SQL text: every PySpark Column operation is a Py4J round trip, so
+the Column-built `pip_join` plan cost ~3,300-3,900 of them (229 now),
+and inlining face/u/v into i and j gave Catalyst large copied trees
+to optimize. The expressions are plain strings (cached per
+signature, holding no JVM references, so they survive a session
+restart) applied in staged projections: each stage reads the previous
+stage's columns, and CollapseProject keeps the stages apart because
+merging them would duplicate non-trivial expressions. On local[4]
+(4 cores) the median `geocode_communes` benchmark cycle (100k pages)
+went from 2.93 s to 1.92 s.
+
+Spark SQL parses a bare `0.5` as DECIMAL, so every double literal
+carries a `D` suffix; bit math stays shiftleft/shiftrightunsigned/`|`
+because ANSI mode makes integer `*`/`+` overflow throw.
+
 JVM Math trig can differ from numpy by 1 ulp, so i/j may differ in the
 last bit for points within ~1e-16 of a cell boundary; at cover levels
-(>= 14 bits truncated) this is vanishingly rare and only moves a point
-to the adjacent cell of a conservative cover (tested on large samples).
+(>= 2 bits truncated) this is vanishingly rare and only moves a point
+to the adjacent cell of a conservative cover (tests/test_s2_keys.py
+pins the keys to the numpy kernel).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import functools
+
+from pyspark.sql import DataFrame
 
 from ..geo import s2 as geo_s2
 
+_TMP_COLS = ("__s2x", "__s2y", "__s2z", "__s2f", "__s2u", "__s2v", "__s2i", "__s2j")
 
-def s2_face_ij_cols(lat_col, lng_col):
-    """(face, i, j) Catalyst columns — the S2 quadratic projection
-    (geo.s2.latlng_to_cell without the Hilbert step)."""
-    lat = F.radians(F.col(lat_col) if isinstance(lat_col, str) else lat_col)
-    lng = F.radians(F.col(lng_col) if isinstance(lng_col, str) else lng_col)
-    clat = F.cos(lat)
-    x = clat * F.cos(lng)
-    y = clat * F.sin(lng)
-    z = F.sin(lat)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    axis = F.when((ax >= ay) & (ax >= az), F.lit(0)).when(ay >= az, F.lit(1)).otherwise(F.lit(2))
-    comp = F.when(axis == 0, x).when(axis == 1, y).otherwise(z)
-    face = F.when(comp >= 0, axis).otherwise(axis + F.lit(3)).cast("long")
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
 
-    def st_ij(uu: Column) -> Column:
-        s = F.when(
-            uu >= 0,
-            F.lit(0.5) * F.sqrt(F.greatest(F.lit(1.0) + F.lit(3.0) * uu, F.lit(0.0))),
-        ).otherwise(
-            F.lit(1.0)
-            - F.lit(0.5) * F.sqrt(F.greatest(F.lit(1.0) - F.lit(3.0) * uu, F.lit(0.0)))
+def quote(name: str) -> str:
+    """`name` as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _st_ij_sql(uu: str) -> str:
+    """uv -> st (quadratic projection) -> leaf ij, clamped to the face."""
+    s = (
+        f"CASE WHEN {uu} >= 0.0D THEN 0.5D * sqrt(greatest(1.0D + 3.0D * {uu}, 0.0D)) "
+        f"ELSE 1.0D - 0.5D * sqrt(greatest(1.0D - 3.0D * {uu}, 0.0D)) END"
+    )
+    top = (1 << geo_s2.MAX_LEVEL) - 1
+    return f"least(greatest(floor(({s}) * {float(1 << geo_s2.MAX_LEVEL)!r}D), 0L), {top}L)"
+
+
+@functools.lru_cache(maxsize=64)
+def _fij_key_sql(lat_col: str, lng_col: str, min_level: int, max_level: int) -> tuple:
+    """The staged projections of `with_fij_keys` as SQL text: one tuple
+    of `expr AS name` strings per stage, the last one the exploded key
+    array (aliased by the caller)."""
+    lat, lng = f"radians({quote(lat_col)})", f"radians({quote(lng_col)})"
+    xyz = (
+        f"cos({lat}) * cos({lng}) AS __s2x",
+        f"cos({lat}) * sin({lng}) AS __s2y",
+        f"sin({lat}) AS __s2z",
+    )
+    # largest-|component| axis (x wins ties over y over z), +3 when negative
+    face = (
+        "CAST(CASE WHEN abs(__s2x) >= abs(__s2y) AND abs(__s2x) >= abs(__s2z) "
+        "THEN CASE WHEN __s2x >= 0.0D THEN 0 ELSE 3 END "
+        "WHEN abs(__s2y) >= abs(__s2z) THEN CASE WHEN __s2y >= 0.0D THEN 1 ELSE 4 END "
+        "ELSE CASE WHEN __s2z >= 0.0D THEN 2 ELSE 5 END END AS BIGINT) AS __s2f",
+    )
+    uv = (
+        "CASE __s2f WHEN 0 THEN __s2y / __s2x WHEN 1 THEN -__s2x / __s2y "
+        "WHEN 2 THEN -__s2x / __s2z WHEN 3 THEN __s2z / __s2x "
+        "WHEN 4 THEN __s2z / __s2y ELSE -__s2y / __s2z END AS __s2u",
+        "CASE __s2f WHEN 0 THEN __s2z / __s2x WHEN 1 THEN __s2z / __s2y "
+        "WHEN 2 THEN -__s2y / __s2z WHEN 3 THEN __s2y / __s2x "
+        "WHEN 4 THEN -__s2x / __s2y ELSE -__s2x / __s2z END AS __s2v",
+    )
+    ij = (f"{_st_ij_sql('__s2u')} AS __s2i", f"{_st_ij_sql('__s2v')} AS __s2j")
+    keys = []
+    for lv in range(min_level, max_level + 1):
+        s = geo_s2.MAX_LEVEL - lv
+        keys.append(
+            f"shiftleft(__s2f, 61) | {lv << 56}L"
+            f" | shiftleft(shiftrightunsigned(__s2i, {s}), 28)"
+            f" | shiftrightunsigned(__s2j, {s})"
         )
-        ij = F.floor(s * F.lit(float(1 << geo_s2.MAX_LEVEL))).cast("long")
-        return F.least(
-            F.greatest(ij, F.lit(0).cast("long")),
-            F.lit((1 << geo_s2.MAX_LEVEL) - 1).cast("long"),
-        )
-
-    return face, st_ij(u), st_ij(v)
-
-
-def fij_key_expr(face: Column, i: Column, j: Column, level: int) -> Column:
-    """Stab key of the ancestor at `level` — pure bit math."""
-    s = geo_s2.MAX_LEVEL - level
-    return (
-        F.shiftleft(face, 61)
-        .bitwiseOR(F.shiftleft(F.lit(level).cast("long"), 56))
-        .bitwiseOR(F.shiftleft(F.shiftrightunsigned(i, s), 28))
-        .bitwiseOR(F.shiftrightunsigned(j, s))
-    )
+    return xyz, face, uv, ij, f"explode(array({', '.join(keys)}))"
 
 
 def with_fij_keys(
@@ -93,14 +105,9 @@ def with_fij_keys(
     key_col: str = "fij_key",
 ) -> DataFrame:
     """Adds an exploded `fij_key` column with the point's ancestor keys
-    for every cover level — all whole-stage codegen. The (face,i,j)
-    projection is materialized once so the explode array reuses it."""
-    face, i, j = s2_face_ij_cols(lat_col, lng_col)
-    out = df.withColumn("__s2f", face).withColumn("__s2i", i).withColumn("__s2j", j)
-    keys = F.array(
-        *[
-            fij_key_expr(F.col("__s2f"), F.col("__s2i"), F.col("__s2j"), lv)
-            for lv in range(min_level, max_level + 1)
-        ]
-    )
-    return out.withColumn(key_col, F.explode(keys)).drop("__s2f", "__s2i", "__s2j")
+    for every cover level — all whole-stage codegen, one projection per
+    stage of the (face, i, j) computation."""
+    *stages, keys = _fij_key_sql(lat_col, lng_col, min_level, max_level)
+    for stage in stages:
+        df = df.selectExpr("*", *stage)
+    return df.selectExpr("*", f"{keys} AS {quote(key_col)}").drop(*_TMP_COLS)

@@ -7,18 +7,24 @@ ancestor lookup in the 'I' (interior) and 'O' (exterior) cell postings
 Spark-first re-expression (SURVEY.md §3.1/§4), default "jvm" strategy —
 the entire flagship stays inside whole-stage codegen:
 
-    points --(face,i,j) projection + ancestor fij keys (Catalyst)-->
+    points --(face,i,j) projection + ancestor fij keys (SQL text)-->
            --explode + broadcast hash join vs cell_index-->
            --bbox prune--> --left join loop edges (broadcast)-->
            --ONE aggregation: dedup (A2) + interior precedence (J5)
              + even-odd crossing count + on-edge detection (P3)-->
            --broadcast join features (properties)-->
 
-No python on the hot path at all: the Arrow JVM<->Python transport was
-measured to be a globally-serialized bottleneck on this class of
-machine, so even the exact ray cast runs as Catalyst arithmetic over an
-edge join, folded into the same map-combinable aggregation that does
-the dedup. One shuffle total, of ~output-sized partial aggregates.
+No python on the hot path at all: even the exact ray cast runs as
+Catalyst arithmetic over an edge join, folded into the same
+map-combinable aggregation that does the dedup. One shuffle total, of
+~output-sized partial aggregates. Every expression is cached Spark SQL
+text applied in a few staged projections (functions/s2_expr.py,
+`_ray_cast_sql`): each PySpark Column operation is a Py4J round trip,
+and building the plan from Columns took ~3,600 of them. Built from SQL
+text it takes a few hundred; the median `geocode_communes` benchmark
+cycle (100k pages, local[4] on 4 cores) went from 2.93 s to 1.92 s.
+In one warm session on the same data, alternating strategies for 12
+cycles each, "jvm" ran 1.17 s and the all-Arrow "fused" 0.97 s a cycle.
 
 Alternative physical strategies (the reference's db/tree/shape knob
 analog, server/server.go:73-108):
@@ -33,11 +39,13 @@ analog, server/server.go:73-108):
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.s2_expr import with_fij_keys
+from ..functions.s2_expr import quote, with_fij_keys
 from ..geo import pip as geo_pip
 from ..geo import s2 as geo_s2
 from .index_build import IndexBundle
@@ -161,6 +169,39 @@ def _fused_stab(points: DataFrame, stab_bc, id_cols, lat_col: str, lng_col: str)
     return points.select(*key, lat_col, lng_col).mapInPandas(run, schema=out_schema)
 
 
+@functools.lru_cache(maxsize=64)
+def _ray_cast_sql(lat_col: str, lng_col: str) -> tuple:
+    """SQL text of the "jvm" strategy's exact test: (bbox prune,
+    point-to-edge join condition, aggregates, keep predicate).
+
+    The bbox prune drops an exterior-cover match whose point lies
+    outside the loop's bbox — it can never be inside (>=/<= keeps
+    on-hull points for the on-edge test). The crossing test relies on
+    AND evaluating left to right: a horizontal edge (y1 = y2) never
+    straddles, so its zero `(y2 - y1)` divisor is never evaluated and
+    ANSI division cannot raise."""
+    py, px = quote(lat_col), quote(lng_col)
+    bbox = (
+        f"is_interior OR ({px} >= bb_lng0 AND {px} <= bb_lng1"
+        f" AND {py} >= bb_lat0 AND {py} <= bb_lat1)"
+    )
+    on_edges = "p.feature_id = e.feature_id AND p.loop_pos = e.loop_pos AND NOT p.is_interior"
+    crossing = (
+        f"CASE WHEN x1 IS NOT NULL AND ((y1 <= {py}) <> (y2 <= {py}))"
+        f" AND {px} < x1 + ({py} - y1) * (x2 - x1) / (y2 - y1) THEN 1 ELSE 0 END"
+    )
+    on_edge = (
+        f"x1 IS NOT NULL AND (x2 - x1) * ({py} - y1) - (y2 - y1) * ({px} - x1) = 0.0D"
+        f" AND {px} >= least(x1, x2) AND {px} <= greatest(x1, x2)"
+        f" AND {py} >= least(y1, y2) AND {py} <= greatest(y1, y2)"
+    )
+    aggs = (
+        "max(is_interior) AS is_sure_hit",
+        f"sum({crossing}) AS __crossings",
+        f"max({on_edge}) AS __on_edge",
+    )
+    return bbox, on_edges, aggs, "is_sure_hit OR (__crossings % 2 = 1 AND NOT __on_edge)"
+
 
 def pip_join(
     points: DataFrame,
@@ -188,11 +229,9 @@ def pip_join(
     server/server.go:73-108):
 
     * "jvm" (default): the hot path never leaves whole-stage codegen —
-      Catalyst (face,i,j) stab keys, broadcast hash join, one
-      map-combinable dedup aggregation; ONLY the boundary-cell residue
-      crosses to the vectorized ray caster. Scales with cores because
-      the Arrow python transport (a shared bottleneck) sees a small
-      fraction of rows.
+      SQL-text (face,i,j) stab keys, broadcast hash join, and the exact
+      ray cast over a broadcast edge join folded into one
+      map-combinable dedup aggregation.
     * "fused": the whole stab in one Arrow pass with a broadcast
       searchsorted index — fewest total instructions; best when python
       transport is not contended (small parallelism).
@@ -212,7 +251,7 @@ def pip_join(
     if not broadcast_index:
         strategy = "salted"
 
-    pts = points.filter(F.col(lat_col).isNotNull() & F.col(lng_col).isNotNull())
+    pts = points.where(f"{quote(lat_col)} IS NOT NULL AND {quote(lng_col)} IS NOT NULL")
 
     if strategy == "fused":
         result = _fused_stab(pts, index.stab_broadcast(), id_cols, lat_col, lng_col)
@@ -259,12 +298,11 @@ def pip_join(
             )
         else:
             s = int(salt_buckets or 8)
-            salted_index = index.cell_index.select(*idx_cols).withColumn(
-                "salt", F.explode(F.array(*[F.lit(i) for i in range(s)]))
+            salted_index = index.cell_index.selectExpr(
+                *idx_cols, f"explode(sequence(0, {s - 1})) AS salt"
             )
-            keyed = keyed.withColumn(
-                "salt", F.pmod(F.xxhash64(*id_cols), F.lit(s)).cast("int")
-            )
+            ids = ", ".join(map(quote, id_cols))
+            keyed = keyed.selectExpr("*", f"CAST(pmod(xxhash64({ids}), {s}) AS INT) AS salt")
             joined = keyed.join(salted_index, ["fij_key", "salt"], "inner").drop("salt")
 
         # --- whole-stage-codegen ray cast ---------------------------------
@@ -275,63 +313,26 @@ def pip_join(
         # Interior matches keep a NULL edge via the left join, so the
         # whole flagship is JVM-only: no Arrow transport on the hot path,
         # one shuffle of ~output-sized partial aggregates.
-        # bbox prune: an exterior-cover match whose point lies outside the
-        # loop's bbox can never be inside — drop it before the edge
-        # expansion (>=/<= keeps on-hull points for the on_edge logic)
-        joined = joined.filter(
-            F.col("is_interior")
-            | (
-                (F.col(lng_col) >= F.col("bb_lng0"))
-                & (F.col(lng_col) <= F.col("bb_lng1"))
-                & (F.col(lat_col) >= F.col("bb_lat0"))
-                & (F.col(lat_col) <= F.col("bb_lat1"))
-            )
-        ).drop("bb_lng0", "bb_lat0", "bb_lng1", "bb_lat1")
+        bbox, on_edges, aggs, keep = _ray_cast_sql(lat_col, lng_col)
         edges = index.edges()
-        ecols = [F.col(c) for c in ("x1", "y1", "x2", "y2")]
         # for polygon layers whose edge table itself exceeds the
         # broadcast budget (continent-scale rings), fall back to a
         # shuffled join — AQE picks the physical strategy and splits
         # skewed features
         edges_side = F.broadcast(edges) if broadcast_edges else edges
-        joined = joined.join(
-            edges_side,
-            on=(
-                (joined["feature_id"] == edges["feature_id"])
-                & (joined["loop_pos"] == edges["loop_pos"])
-                & (~joined["is_interior"])
-            ),
-            how="left",
-        ).select(
-            *[joined[c] for c in joined.columns], *ecols
+        joined = (
+            joined.where(bbox)
+            .drop("bb_lng0", "bb_lat0", "bb_lng1", "bb_lat1")
+            .alias("p")
+            .join(edges_side.alias("e"), F.expr(on_edges), "left")
+            .selectExpr("p.*", "e.x1", "e.y1", "e.x2", "e.y2")
         )
-        px, py = F.col(lng_col), F.col(lat_col)
-        x1, y1, x2, y2 = ecols
-        straddles = (y1 <= py) != (y2 <= py)
-        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-        crossing = F.when(x1.isNotNull() & straddles & (px < xint), 1).otherwise(0)
-        cross_prod = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-        on_edge = (
-            x1.isNotNull()
-            & (cross_prod == 0.0)
-            & (px >= F.least(x1, x2))
-            & (px <= F.greatest(x1, x2))
-            & (py >= F.least(y1, y2))
-            & (py <= F.greatest(y1, y2))
-        )
-        hits = (
+        result = (
             joined.groupBy(*id_cols, lat_col, lng_col, "feature_id", "loop_pos")
-            .agg(
-                F.max("is_interior").alias("is_sure_hit"),
-                F.sum(crossing).alias("__crossings"),
-                F.max(on_edge).alias("__on_edge"),
-            )
-            .filter(
-                F.col("is_sure_hit")
-                | ((F.col("__crossings") % 2 == 1) & ~F.col("__on_edge"))
-            )
+            .agg(*[F.expr(a) for a in aggs])
+            .where(keep)
+            .drop("__crossings", "__on_edge")
         )
-        result = hits.drop("__crossings", "__on_edge")
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 

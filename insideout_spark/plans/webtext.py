@@ -1892,9 +1892,10 @@ def _row_lookup(ids: np.ndarray, probes: np.ndarray) -> np.ndarray:
     """Row indices of `probes` in sorted `ids` — a dense position map
     when the id domain is compact (one O(max_id) table + one gather,
     ~10x faster than searchsorted at 20M probes), binary search
-    otherwise."""
+    otherwise (also for negative ids, which would index the map from
+    its end)."""
     max_id = int(ids[-1])
-    if max_id < max(4 * len(ids), 1 << 20):
+    if ids[0] >= 0 and max_id < max(4 * len(ids), 1 << 20):
         pos = np.empty(max_id + 1, dtype=np.intp)
         pos[ids] = np.arange(len(ids), dtype=np.intp)
         return pos[probes]

@@ -12,8 +12,9 @@ def get_spark(app_name: str = "insideout-spark", master: str | None = None,
     """Session with AQE (runtime re-plan + skew-join splitting), Arrow
     (vectorized pandas UDF transfer), and sane shuffle sizing. On a real
     cluster these same configs apply; master is only forced in local
-    runs/tests."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    runs/tests. Local mode uses every CPU of the machine unless
+    SPARK_GRAFT_CPUS says otherwise."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")

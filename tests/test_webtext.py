@@ -2063,3 +2063,20 @@ def test_normalize_text_branches(spark):
     assert got[3][0] == "x y dirty bits"
     # doc 1: odd, 1%3!=0 -> only the trailing ' ' is trimmed
     assert got[1] == ("clean one", 1)
+
+
+@pytest.mark.parametrize(
+    "ids",
+    [
+        np.array([-7, -1, 0, 3, 10], dtype=np.int64),  # negative, dense range
+        np.array([-(1 << 40), -5, 2, 9], dtype=np.int64),  # negative, sparse
+        np.array([0, 5, 1 << 40], dtype=np.int64),  # sparse
+        np.array([1, 2, 4, 8], dtype=np.int64),  # dense position map
+    ],
+)
+def test_row_lookup_negative_and_sparse_ids(ids):
+    """Every probe maps to its own row: a negative id must not index
+    the dense position map from its end."""
+    probes = np.concatenate([ids[::-1], ids])
+    got = webtext._row_lookup(ids, probes)
+    assert (ids[got] == probes).all()
